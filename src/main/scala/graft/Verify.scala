@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare (`tools/check.py`).
+  * Exits non-zero, naming the queries, when any query throws. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -14,7 +15,6 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // optional comma-separated query-name filter for cheap re-runs of
     // individual queries (empty/unset = all)
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
@@ -25,11 +25,37 @@ object Verify {
     }
     only.foreach(o => (o -- SparkEntry.queries.keySet).foreach(n =>
       System.err.println(s"[verify] unknown query in SPARK_GRAFT_QUERIES: $n")))
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = dump(spark, sfDir, outDir, selected)
+    spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Writes each query's result to `$outDir/<name>` and the oracle SQL to
+    * `$outDir/oracle_sql.json`; returns the names of the queries that threw,
+    * sorted. A query's directory is deleted before it runs and again if it
+    * throws, so a reused out dir never holds a stale or partial result that
+    * a check could pass.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           queries: Map[String, (SparkSession, String) => DataFrame]): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete(); ()
+    }
+    val failed = queries.toSeq.flatMap { case (name, fn) =>
+      val target = new java.io.File(s"$outDir/$name")
+      rm(target)
+      try {
+        fn(spark, sfDir).coalesce(1).write.parquet(target.getPath)
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        rm(target)
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -47,6 +73,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failed.sorted
   }
 }

@@ -14,7 +14,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   *  - local `file://` — NIO `Files.createFile` (O_EXCL). Hadoop's own
   *    `create(overwrite=false)` on the local FS is CHECK-THEN-CREATE, the
-  *    TOCTOU the r12 WorkerRace soak hit at 80 indices.
+  *    TOCTOU the r12 worker-race soak hit at 80 indices (BASELINE.md
+  *    "Round-12: worker-race soak").
   *  - HDFS-class stores — `create(overwrite=false)`, enforced atomically
   *    server-side (the namenode serializes creates).
   *  - S3-class object stores — NO atomic create-exclusive at the Hadoop
@@ -141,10 +142,11 @@ object LockProvider {
     /** A lease file's observed state. `Garbled` (empty or unparsable) is
       * NOT absent: on a store whose writes are not atomically visible, it
       * means a PUT is in flight THIS INSTANT — treating it as absent let a
-      * contender steal a just-created claim in the CompactRace naf soak
-      * (one index committed twice). Real object-store PUTs are
-      * atomic-visibility, so Garbled there means a torn/corrupt object —
-      * refusing is the right call in both worlds.
+      * contender steal a just-created claim on the simulated object store
+      * (one index committed twice; BASELINE.md "Race soaks on the simulated
+      * object store", pinned by LockProviderSpec's torn-lease test). Real
+      * object-store PUTs are atomic-visibility, so Garbled there means a
+      * torn/corrupt object — refusing is the right call in both worlds.
       */
     private sealed trait LeaseState
     private case object Absent extends LeaseState

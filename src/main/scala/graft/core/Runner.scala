@@ -221,8 +221,9 @@ object Runner {
     // Per-store exclusion primitive (LockProvider). The default is atomic
     // create-exclusive per scheme: Hadoop's FileSystem.createNewFile is
     // CHECK-THEN-CREATE on the local filesystem (a TOCTOU hole the
-    // WorkerRace soak hit at 80 indices: racing claimants both passed the
-    // exists() check and both "won"); java.nio's createFile is O_EXCL —
+    // r12 worker-race soak hit at 80 indices, BASELINE.md "Round-12:
+    // worker-race soak": racing claimants both passed the exists() check
+    // and both "won"); java.nio's createFile is O_EXCL —
     // genuinely atomic — so local claims go through NIO, while HDFS-class
     // schemes use create(overwrite = false), enforced atomically
     // server-side. Object stores WITHOUT atomic create-exclusive route

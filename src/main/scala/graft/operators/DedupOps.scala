@@ -479,7 +479,7 @@ object DedupOps {
     * cost on genuinely deep graphs is bounded by maxIter cheap rounds
     * before the O(log²) path takes over). Callers that need the round
     * count (or strict fail-loud min-label semantics) use
-    * [[connectedComponentsRounds]] / [[connectedComponentsStarsRounds]].
+    * [[connectedComponentsRounds]].
     */
   def connectedComponents(ids: DataFrame, idCol: String, pairs: DataFrame,
                           maxIter: Int = 20,
@@ -492,8 +492,8 @@ object DedupOps {
 
   /** [[connectedComponents]] plus the number of propagation rounds it took
     * to converge — the scale-measurement surface (rounds ≈ component
-    * diameter + 1 is the algorithm's cost model; `tools.CcScale` records
-    * it against depth decades).
+    * diameter + 1 is the algorithm's cost model; BASELINE.md "Round-11:
+    * connected-components decades" records it against depth decades).
     */
   def connectedComponentsRounds(ids: DataFrame, idCol: String, pairs: DataFrame,
                                 maxIter: Int = 20,
@@ -593,15 +593,7 @@ object DedupOps {
     */
   def connectedComponentsStars(ids: DataFrame, idCol: String, pairs: DataFrame,
                                maxIter: Int = 25,
-                               checkpointDir: Option[String] = None): DataFrame =
-    connectedComponentsStarsRounds(ids, idCol, pairs, maxIter, checkpointDir)._1
-
-  /** [[connectedComponentsStars]] plus its converged round count (the
-    * O(log²) bound under measurement in `tools.CcScale`).
-    */
-  def connectedComponentsStarsRounds(ids: DataFrame, idCol: String,
-                                     pairs: DataFrame, maxIter: Int = 25,
-                                     checkpointDir: Option[String] = None): (DataFrame, Int) = {
+                               checkpointDir: Option[String] = None): DataFrame = {
     val spark = ids.sparkSession
     val ckpt = new CkptCycle(spark, checkpointDir)
 
@@ -653,10 +645,10 @@ object DedupOps {
     // converged edges form stars u -> root; nodes absent from any pair are
     // their own singleton components
     val labels = edges.select(col("u").as("node"), col("v").as("component"))
-    (ids.select(col(idCol).cast("long").as("node"))
+    ids.select(col(idCol).cast("long").as("node"))
       .join(labels, Seq("node"), "left")
       .select(col("node").as(idCol),
-        coalesce(col("component"), col("node")).as("component")), it)
+        coalesce(col("component"), col("node")).as("component"))
   }
 
   /** Dedup resolution: (id, component, is_survivor) — survivor = min id per

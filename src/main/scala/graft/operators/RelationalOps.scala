@@ -112,9 +112,9 @@ object RelationalOps {
     * unique column), so one hot key spreads over nSalts reducers instead of
     * one straggler task. PREFER AQE's runtime skew-join where it applies:
     * measured head-to-head on a 60 M-row join with 25% of rows on one key
-    * (tools/SkewProbe, BASELINE.md round-9), AQE's split ran 2.6× faster
-    * than the unsplit join while salting ran SLOWER than no mitigation at
-    * all — its cost is nSalts × |small|, which dominates unless the small
+    * (BASELINE.md "Round-9: AQE skew-join vs manual salting"), AQE's split
+    * ran 2.6× faster than the unsplit join while salting ran SLOWER than
+    * no mitigation at all — its cost is nSalts × |small|, which dominates unless the small
     * side is a genuinely bounded dimension table. Use this only when the
     * replicated side is tiny or AQE can't re-plan the join (streaming
     * joins, non-shuffle stages) — SURVEY §4 "Skewed keys → salting or AQE".

@@ -504,7 +504,7 @@ object SimilarityOps {
     * ones (sProbe = nSuper reproduces the flat argmax bit-for-bit); a
     * vector assigned to a near-best list instead is the standard
     * approximate-build trade — recall impact is measured, not assumed
-    * (AnnCurve ivf_scale arm).
+    * (BASELINE.md "Two-level IVF build (VERDICT r14 item 4)").
     */
   def ivfListsTwoLevel(df: DataFrame, idCol: String, vecCol: String,
                        centroids: Seq[Array[Float]],

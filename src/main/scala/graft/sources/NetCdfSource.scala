@@ -212,8 +212,8 @@ object NetCdfSource {
     * ×4 from 8 KiB until the header fits the window. The small start
     * matters at scale: a pushed variable predicate reduces a pruned file
     * to exactly this window, so it bounds the per-file floor of a
-    * many-file scan (measured by RangedScanProbe: 800 pruned files cost
-    * ~8 KiB each, not their 780 KiB payloads).
+    * many-file scan (BASELINE.md "Round-10: ranged-scan byte footprints":
+    * 800 pruned files cost ~8 KiB each, not their 780 KiB payloads).
     */
   private[sources] def parseHeaderRaw(raw: VtkXmlSource.RawData): NcFile = {
     var window = math.min(raw.size, 8L << 10)

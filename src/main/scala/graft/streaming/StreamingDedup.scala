@@ -313,8 +313,8 @@ object StreamingDedup {
     * index-self-contained filter that runs at ingestion cadence, O(16)
     * per candidate.
     *
-    * CHOOSING tau (measured curve: tools/VerifyTauCurve + BASELINE.md
-    * r16 table, labeled fixture, J ≥ 0.5 ground truth): the default
+    * CHOOSING tau (measured curve: BASELINE.md "Verify-tier tau operating
+    * curve", labeled fixture, J ≥ 0.5 ground truth): the default
     * 8/16 keeps 99% of candidate dups at 0.77 precision (its false
     * positives are mostly J ∈ [0.35, 0.5) genuine near-dups); for a
     * ≥ 0.85 precision target use 13/16 and accept ~38% candidate
@@ -410,8 +410,8 @@ object StreamingDedup {
   private val BatchFileRe = java.util.regex.Pattern.compile("b(\\d+)_.*\\.parquet")
 
   /** Test seam: runs between the fold's install renames and its delete
-    * pass, so specs can deterministically pin the two interleaves the
-    * FoldSteal soak only hits probabilistically — a lease steal (the
+    * pass, so specs can deterministically pin the two interleaves a
+    * racing soak only hits probabilistically — a lease steal (the
     * delete fence must abort) and a rival install landing post-snapshot
     * (the snapshot-scoped delete must leave it untouched). No-op in
     * production.

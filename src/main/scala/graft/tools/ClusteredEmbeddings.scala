@@ -12,8 +12,7 @@ import org.apache.spark.sql.SparkSession
   * are center + N(0, sigma²) noise via Box–Muller over splitmix64
   * streams. Distributed generation (one typed map over a range — no
   * driver-side data), written as `<dest>/embeddings.parquet` so every
-  * embeddings-table tool (AnnCurve, annRecallReport) runs on it
-  * unchanged.
+  * embeddings-table tool (annRecallReport) runs on it unchanged.
   *
   * Usage: `runMain graft.tools.ClusteredEmbeddings <destDir> [n]
   * [clusters] [dim] [sigma] [seed]`

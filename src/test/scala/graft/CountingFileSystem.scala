@@ -1,4 +1,4 @@
-package graft.tools
+package graft
 
 import java.io.InputStream
 import java.net.URI

@@ -182,7 +182,7 @@ class Dsv2SourcesSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     s.sparkContext.hadoopConfiguration
-      .set("fs.cntfs.impl", classOf[graft.tools.CountingFileSystem].getName)
+      .set("fs.cntfs.impl", classOf[CountingFileSystem].getName)
     val n = 100000
     val pts = s.range(2).select(col("id").as("m")).crossJoin(
       s.range(n).select(col("id").as("point_id")))
@@ -202,18 +202,18 @@ class Dsv2SourcesSpec extends SparkSpec {
     val headerBound = 128L * 1024 // 16K head + 4K tail per file, with slack
 
     // planning: load() infers the schema across both files
-    graft.tools.CountingFileSystem.reset()
+    CountingFileSystem.reset()
     val wide = s.read.format("graft.sources.VtuDataSource")
       .option("path", s"cntfs:$out").load()
-    val inferBytes = graft.tools.CountingFileSystem.bytesRead.get()
+    val inferBytes = CountingFileSystem.bytesRead.get()
     assert(wide.columns.contains("a1"))
     assert(inferBytes > 0 && inferBytes < headerBound,
       s"inference read $inferBytes of $totalBytes bytes — payload touched")
 
     // scan with ONE of three arrays, no points
-    graft.tools.CountingFileSystem.reset()
+    CountingFileSystem.reset()
     val sum1 = wide.select("a0").agg(sum("a0")).collect().head.getDouble(0)
-    val bytes1 = graft.tools.CountingFileSystem.bytesRead.get()
+    val bytes1 = CountingFileSystem.bytesRead.get()
     assert(sum1 == 2.0 * n.toLong * (n + 1) / 2, sum1.toString)
     // one array = n*8 bytes + header words per file; well under half the file
     assert(bytes1 < 2L * (n * 8L + 64L * 1024),
@@ -221,24 +221,24 @@ class Dsv2SourcesSpec extends SparkSpec {
 
     // scan with all three arrays reads ~3x the single-array payload
     // (summing all three keeps Catalyst from pruning the other two away)
-    graft.tools.CountingFileSystem.reset()
+    CountingFileSystem.reset()
     wide.agg(sum(col("a0") + col("a1") + col("a2"))).collect()
-    val bytes3 = graft.tools.CountingFileSystem.bytesRead.get()
+    val bytes3 = CountingFileSystem.bytesRead.get()
     assert(bytes1 < bytes3 / 2,
       s"pruning saved no I/O: 1 array = $bytes1, 3 arrays = $bytes3")
 
     // count-only touches headers, zero payload
-    graft.tools.CountingFileSystem.reset()
+    CountingFileSystem.reset()
     assert(wide.groupBy("mesh_id").count().collect().map(_.getLong(1)).toSet == Set(n.toLong))
-    val bytesCount = graft.tools.CountingFileSystem.bytesRead.get()
+    val bytesCount = CountingFileSystem.bytesRead.get()
     assert(bytesCount < headerBound,
       s"count-only scan read $bytesCount bytes of payload")
 
     // user-supplied schema: zero read at planning time
-    graft.tools.CountingFileSystem.reset()
+    CountingFileSystem.reset()
     val typed = s.read.format("graft.sources.VtuDataSource")
       .schema(wide.schema).option("path", s"cntfs:$out").load()
-    assert(graft.tools.CountingFileSystem.bytesRead.get() == 0L,
+    assert(CountingFileSystem.bytesRead.get() == 0L,
       "user-supplied schema still triggered an inference read")
     assert(typed.select("a2").agg(sum("a2")).collect().head.getDouble(0) == sum1)
   }
@@ -431,7 +431,7 @@ class Dsv2SourcesSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     s.sparkContext.hadoopConfiguration
-      .set("fs.cntfs.impl", classOf[graft.tools.CountingFileSystem].getName)
+      .set("fs.cntfs.impl", classOf[CountingFileSystem].getName)
     val n = 200000
     // two one-variable files (the sink layout): selecting one variable
     // must cost the other file only its header bytes
@@ -447,17 +447,17 @@ class Dsv2SourcesSpec extends SparkSpec {
 
     val ds = s.read.format("graft.sources.NetCdfDataSource")
       .option("path", s"cntfs:$out").load()
-    graft.tools.CountingFileSystem.reset()
+    CountingFileSystem.reset()
     val sum1 = ds.filter(col("variable") === "temp")
       .agg(sum("value")).collect().head.getDouble(0)
-    val bytes1 = graft.tools.CountingFileSystem.bytesRead.get()
+    val bytes1 = CountingFileSystem.bytesRead.get()
     assert(sum1 == 0.5 * (n.toLong * (n - 1) / 2), sum1.toString)
     // one variable's payload + two headers — well under 3/4 of the corpus
     assert(bytes1 < totalBytes * 3 / 4,
       s"variable-pushed scan read $bytes1 of $totalBytes bytes")
-    graft.tools.CountingFileSystem.reset()
+    CountingFileSystem.reset()
     ds.agg(sum("value")).collect()
-    val bytesAll = graft.tools.CountingFileSystem.bytesRead.get()
+    val bytesAll = CountingFileSystem.bytesRead.get()
     assert(bytes1 < bytesAll * 3 / 4,
       s"pushdown saved no I/O: pushed=$bytes1 full=$bytesAll")
   }
@@ -486,7 +486,7 @@ class Dsv2SourcesSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     s.sparkContext.hadoopConfiguration
-      .set("fs.cntfs.impl", classOf[graft.tools.CountingFileSystem].getName)
+      .set("fs.cntfs.impl", classOf[CountingFileSystem].getName)
     // incompressible hex payloads >> MaxInline: every value lands in
     // F_BIGDATA overflow pages, so the id-only scan walks just the
     // B-tree skeleton
@@ -510,14 +510,14 @@ class Dsv2SourcesSpec extends SparkSpec {
 
     val ds = s.read.format("graft.sources.AseLmdbDataSource")
       .option("path", s"cntfs:$out").load()
-    graft.tools.CountingFileSystem.reset()
+    CountingFileSystem.reset()
     assert(ds.select("row_id").collect().map(_.getLong(0)).sorted.toSeq ==
       (0L until 12L).toSeq)
-    val idBytes = graft.tools.CountingFileSystem.bytesRead.get()
-    graft.tools.CountingFileSystem.reset()
+    val idBytes = CountingFileSystem.bytesRead.get()
+    CountingFileSystem.reset()
     val js = ds.select("row_id", "json").collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
-    val jsonBytes = graft.tools.CountingFileSystem.bytesRead.get()
+    val jsonBytes = CountingFileSystem.bytesRead.get()
     assert(js(3L).contains(hex(3L, 8192)), "overflow value decode broken")
     assert(idBytes < totalBytes / 4,
       s"id-only scan read $idBytes of $totalBytes bytes")
@@ -529,7 +529,7 @@ class Dsv2SourcesSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     s.sparkContext.hadoopConfiguration
-      .set("fs.cntfs.impl", classOf[graft.tools.CountingFileSystem].getName)
+      .set("fs.cntfs.impl", classOf[CountingFileSystem].getName)
     val nP = 4000
     val pts = (0L until nP.toLong).map(i => (0L, i, i * 1.0, 0.0, 0.0))
       .toDF("mesh_id", "point_id", "x", "y", "z")
@@ -573,17 +573,17 @@ class Dsv2SourcesSpec extends SparkSpec {
 
     val splitRootLen = geomLen.toLong
     val contLen = rootBytes.length.toLong - geomLen
-    graft.tools.CountingFileSystem.reset()
+    CountingFileSystem.reset()
     load(s"cntfs:$split", "points").agg(count(lit(1))).collect()
-    val ptBytes = graft.tools.CountingFileSystem.bytesRead.get()
+    val ptBytes = CountingFileSystem.bytesRead.get()
     // header probe (<= 64 KiB) + geometry prefix — never the continuation
     assert(ptBytes <= splitRootLen + (64L << 10),
       s"points scan read $ptBytes; root prefix is $splitRootLen")
     assert(ptBytes < contLen,
       s"points scan ($ptBytes) should undercut the state payload ($contLen)")
-    graft.tools.CountingFileSystem.reset()
+    CountingFileSystem.reset()
     load(s"cntfs:$split", "states").agg(count(lit(1))).collect()
-    val stBytes = graft.tools.CountingFileSystem.bytesRead.get()
+    val stBytes = CountingFileSystem.bytesRead.get()
     assert(stBytes > contLen, s"states scan must read the continuation: $stBytes")
   }
 }

@@ -7,7 +7,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.core._
-import graft.tools.NonAtomicFileSystem
 
 /** Pluggable lock providers under an ADVERSARIAL store: the `naf:` scheme
   * simulates an object store without atomic create-exclusive (check-then-
@@ -120,9 +119,9 @@ class LockProviderSpec extends SparkSpec {
     // On a store whose writes are not atomically visible, an empty or
     // unparsable lease file means a PUT is in flight RIGHT NOW — treating
     // it as absent let a contender steal a just-created claim (the
-    // CompactRace naf soak hit this as a double-committed index). It must
-    // refuse — unless the remnant is older than the TTL (writer died
-    // mid-PUT), in which case it breaks and contends.
+    // compaction soak on the naf store hit this as a double-committed
+    // index). It must refuse — unless the remnant is older than the TTL
+    // (writer died mid-PUT), in which case it breaks and contends.
     withNaf(lease = true) {
       val dir = Files.createTempDirectory("graft-naf-torn").toString
       val target = new Path(s"naf://$dir/lock")

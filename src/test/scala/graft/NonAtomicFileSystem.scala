@@ -1,4 +1,4 @@
-package graft.tools
+package graft
 
 import java.net.URI
 
@@ -12,7 +12,7 @@ import org.apache.hadoop.util.Progressable
   * that follows the check is last-writer-wins (a racing PUT simply
   * replaces the earlier one — S3 semantics). This is the adversarial
   * harness for the lock protocols: under it, the default create-exclusive
-  * provider REPRODUCES the r12 WorkerRace TOCTOU (two claimants both pass
+  * provider REPRODUCES the r12 claim TOCTOU (two claimants both pass
   * the exists check and both "win"), and the fencing-token lease
   * ([[graft.core.LockProvider.Lease]]) must still yield at-most-one
   * winner. Register with

@@ -168,7 +168,8 @@ class SimilaritySpec extends SparkSpec {
       (got & truth).size.toDouble / truth.size
     }
     // deterministic init + fixed data → these are FIXED numbers, not flaky
-    // statistics; pin the budget ordering the AnnCurve table documents
+    // statistics; pin the budget ordering BASELINE.md's PQ code-budget
+    // curve documents
     // (4 B: m=8,k=16 → 8 B: m=16,k=16 → 16 B: m=16,k=256)
     val r4 = recall(8, 16)
     val r8 = recall(16, 16)
@@ -209,7 +210,7 @@ class SimilaritySpec extends SparkSpec {
     // a sampled-train index still ranks: recall@10 vs brute stays in the
     // same class as full-train (both trained on isotropic noise — the
     // documented PQ worst case; the pin is "not degenerate", the measured
-    // parity row lives in the AnnCurve table at sf0.1)
+    // parity row lives in BASELINE.md "Sample-bounded IVF/PQ training")
     val truth = SimilarityOps.topKCosine(emb, "vec_id", "embedding", 10, 6L)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val cbS = SimilarityOps.pqCodebooks(emb, "vec_id", "embedding",
@@ -563,7 +564,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("IVF compact fence: a stolen lease aborts before the delete phase; nothing destroyed") {
     val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("fs.naf.impl", classOf[graft.tools.NonAtomicFileSystem].getName)
+    hc.set("fs.naf.impl", classOf[NonAtomicFileSystem].getName)
     hc.set("fs.naf.impl.disable.cache", "true")
     hc.set("graft.lock.provider.naf", "lease")
     hc.set("graft.lock.lease.settle.ms", "10")

@@ -300,7 +300,7 @@ class StreamingSpec extends SparkSpec {
     // lease provider on the simulated non-atomic store: the fence's token
     // read-back is what detects a steal (create-exclusive has no token)
     val hc = s.sparkContext.hadoopConfiguration
-    hc.set("fs.naf.impl", classOf[graft.tools.NonAtomicFileSystem].getName)
+    hc.set("fs.naf.impl", classOf[NonAtomicFileSystem].getName)
     hc.set("fs.naf.impl.disable.cache", "true")
     hc.set("graft.lock.provider.naf", "lease")
     hc.set("graft.lock.lease.settle.ms", "10")
@@ -401,7 +401,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("verify tier tau=8/16 operating point pinned on the labeled near-dup fixture") {
-    // the VerifyTauCurve fixture at nBase=400 (BASELINE.md r16 table):
+    // the tau-curve fixture at nBase=400 (BASELINE.md "Verify-tier tau
+    // operating curve"):
     // engineered kept-prefix pairs with exact 3-shingle Jaccard
     // (m-2)/(116-(m-2)), label = J >= 0.5. The default tau = 8/16 must
     // keep its measured row: >= 99% of candidate dups verified (exactly

@@ -6,8 +6,11 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name> parquet (written by graft.Verify), runs the
 matching oracle SQL from oracle_sql.json in DuckDB with views over the sfDir
 tables, and compares (columns sorted by name, rows sorted, exact values).
+An output directory without an oracle key, or an oracle key without an
+output directory, counts as a failure.
 """
 import json
+import os
 import sys
 
 import duckdb
@@ -32,7 +35,17 @@ def main(sf_dir: str, out_dir: str) -> int:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    # every output has an oracle and every oracle an output
+    outputs = {d for d in os.listdir(out_dir)
+               if os.path.isdir(os.path.join(out_dir, d))}
+    for name in sorted(outputs - oracle.keys()):
+        print(f"FAIL {name}: output directory has no oracle SQL")
+        n_fail += 1
     for name, sql in sorted(oracle.items()):
+        if name not in outputs:
+            print(f"FAIL {name}: no output directory")
+            n_fail += 1
+            continue
         try:
             got = canon(con.sql(
                 f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df())
